@@ -3,9 +3,12 @@ surface (``python -m cdc_kafka``, reference ``options.py`` flag names,
 ``__main__.py:1-15``) plus its standalone tools:
 
     python -m sqlserver_cdc_to_kafka_spark --sf-dir DIR --sink-dir OUT
-        run the pipeline: drive the reverse-keyset snapshot to completion,
-        unify it with the change feed (T7) and write each topic's envelope
-        rows to the sink as parquet (main.py's produce loop, batch form).
+        run the pipeline (main.py's produce loop) through
+        ``streaming.pipeline_run.PipelineRun``: snapshot pages interleaved
+        with change batches, tombstones after deletes, each batch committed
+        with its position to ``OUT/<topic>/`` (``data/batch=N/`` plus
+        ``_manifest.jsonl``). A rerun resumes the snapshot and the changes
+        from the manifest and commits only what is missing.
     ... --run-validations
         run the validator family (validation.py:56-197 and
         progress_topic_validator.py analogs) and print one JSON line per
@@ -141,15 +144,11 @@ def _run_named_queries(spark, sf_dir: str, names: Sequence[str]) -> None:
 
 
 def _run_pipeline(spark, sf_dir: str, sink_dir: str, cfg: EngineConfig) -> None:
-    """Batch form of the reference's produce loop: snapshot-to-completion
-    unified with the change feed, one output dir per topic."""
-    from pyspark.sql import functions as F
-
+    """One table through ``PipelineRun`` into ``<sink_dir>/<topic>``."""
     from sqlserver_cdc_to_kafka_spark.queries.cdc import cdc_events
-    from sqlserver_cdc_to_kafka_spark.streaming.snapshot_stream import (
-        SnapshotStream,
-        unified_feed,
-    )
+    from sqlserver_cdc_to_kafka_spark.streaming.metrics import AccumulatingReporter
+    from sqlserver_cdc_to_kafka_spark.streaming.pipeline_run import PipelineRun
+    from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
     from sqlserver_cdc_to_kafka_spark.tables import load_table
 
     fq_name = "dbo.orders"
@@ -158,22 +157,18 @@ def _run_pipeline(spark, sf_dir: str, sink_dir: str, cfg: EngineConfig) -> None:
         return
     topic = cfg.topic_for("dbo", "orders")
     orders = load_table(spark, sf_dir, "orders")
-    pages: list = []
-    if cfg.table_snapshotted(fq_name):
-        pager = SnapshotStream(
-            orders, ["o_orderkey"], batch_size=cfg.db_row_batch_size
-        )
-        while (p := pager.next_page()) is not None:
-            pages.append(p)
-    feed = cdc_events(spark, sf_dir)
-    if cfg.disable_deletion_tombstones:
-        feed = feed.filter(F.col("__operation") != 1)
-    out = unified_feed(pages, feed)
+    if not cfg.table_snapshotted(fq_name):
+        orders = orders.limit(0)
     path = f"{sink_dir}/{topic}"
-    out.write.mode("overwrite").parquet(path)
-    n = spark.read.parquet(path).count()
-    _emit("topic_written", topic=topic, path=path, rows=n,
-          snapshot_pages=len(pages))
+    batches = AccumulatingReporter()
+    run = PipelineRun(
+        spark, orders, cdc_events(spark, sf_dir), ["o_orderkey"],
+        TransactionalDirSink(path, topic), [batches], cfg.db_row_batch_size,
+        tombstones=not cfg.disable_deletion_tombstones,
+    )
+    rows = run.run()
+    _emit("topic_written", topic=topic, path=path, rows=rows,
+          snapshot_pages=sum(1 for m in batches.emitted if m.snapshots))
 
 
 def _reset_progress(args: argparse.Namespace) -> int:

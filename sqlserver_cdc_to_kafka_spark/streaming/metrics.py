@@ -19,7 +19,7 @@ import time
 from dataclasses import asdict, dataclass, field
 from typing import TextIO
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 METRICS_REPORTING_INTERVAL_S = 20  # constants.py:8
@@ -95,6 +95,16 @@ def observed_batch(batch: DataFrame, op_col: str = "__operation", idx_col: str =
         F.max(idx_col).alias("max_index"),
     )
     return observed, obs
+
+
+def summarize(df: DataFrame, *aggs: Column) -> dict:
+    """Named aggregates of ``df`` in ONE Spark job. A global ``df.agg`` needs
+    an exchange to one partition, and under AQE that exchange runs as a job
+    of its own; an Observation is merged on the driver instead, so a no-op
+    write is the only job. On a cached ``df`` that job also fills the cache."""
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
 
 
 def report_batch(

@@ -3,12 +3,17 @@ composed from the engine's parts:
 
 per cycle: snapshot pages interleave with change micro-batches (T7) →
 tombstones appended after deletes (T6) → batch + progress committed together
-(T2, manifest transaction) → metrics observed in-job and reported (A9/X2) →
-self-validation over the engine's own committed output (§5's validators as
-product).
+(T2, manifest transaction) → metrics observed in-job and reported (A9/X2).
 
-This is pull-mode (bounded feeds) — the test harness shape; the same
-composition drives ``readStream`` sources unchanged."""
+This is the package's one way to run a table: the CLI's pipeline mode and
+the benchmark both drive it, so every run gets the same manifest, resume
+point, tombstones and metrics. The sink's manifest is the only progress
+record: a run resumes its changes from ``sink.last_progress()`` and its
+snapshot from ``sink.last_snapshot_key()``, and takes each batch's id from
+the sink (``commit_next``), so a rerun after a crash or after new changes
+commits exactly what is missing. Each batch costs one job for its poll or
+page (row count and position or resume key, see ``metrics.summarize``) and
+one write job, which also fills its metrics."""
 
 from __future__ import annotations
 
@@ -26,15 +31,21 @@ from sqlserver_cdc_to_kafka_spark.streaming.metrics import (
     ReporterBase,
     observed_batch,
     report_batch,
+    summarize,
 )
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
-from sqlserver_cdc_to_kafka_spark.streaming.snapshot_stream import SnapshotStream
+from sqlserver_cdc_to_kafka_spark.streaming.snapshot_stream import (
+    SnapshotStream,
+    as_change_rows,
+)
 
 
 @dataclass
 class PipelineRun:
     """Drive one table's snapshot + change feed to completion against a
-    transactional sink, reporting metrics per batch."""
+    transactional sink, reporting metrics per batch. ``tombstones=False`` is
+    ``disable_deletion_tombstones``: deletes are still emitted, only the
+    (key, null) row after each is not."""
 
     spark: SparkSession
     source_table: DataFrame
@@ -45,26 +56,27 @@ class PipelineRun:
     batch_size: int = 2000
     batches_committed: int = 0
     rows_committed: int = 0
+    tombstones: bool = True
 
     def run(self) -> int:
         """Interleave snapshot pages with change micro-batches, as the
         reference fills the gap between CDC polls with snapshot work
         (main.py:214-267). Returns total rows committed (snapshot rows +
         change rows + tombstones)."""
-        snap = SnapshotStream(self.source_table, self.key_cols, self.batch_size)
+        snap = SnapshotStream(
+            self.source_table, self.key_cols, self.batch_size, self.sink.last_snapshot_key()
+        )
         mb = MicroBatcher(
             self.change_feed,
-            self.sink.topic,
             batch_size=self.batch_size,
             sink=self._commit_changes,
+            offset=self.sink.last_progress(),
         )
-        resume = self.sink.last_progress()
-        if resume is not None:
-            mb._offset = resume
         while True:
             page = snap.next_page()
             if page is not None:
-                self._commit(self._snapshot_envelope(page), None)
+                rows = as_change_rows(page, self.change_feed)
+                self._commit(rows.withColumn("__tombstone", F.lit(False)), None, snap.last_key)
                 page.unpersist()
             emitted = mb.run_once()
             if snap.completed and emitted < self.batch_size:
@@ -72,33 +84,23 @@ class PipelineRun:
 
     # -- internals ---------------------------------------------------------
 
-    def _snapshot_envelope(self, page: DataFrame) -> DataFrame:
-        # same output schema as the tombstoned change batches (one sink)
-        cols = self.change_feed.columns
-        out = page
-        for c in cols:
-            if c not in page.columns:
-                dt = self.change_feed.schema[c].dataType
-                if c == "__operation":
-                    out = out.withColumn(c, F.lit(0))
-                else:
-                    out = out.withColumn(c, F.lit(None).cast(dt))
-        return out.select(*cols).withColumn("__tombstone", F.lit(False))
+    def _commit_changes(self, batch: DataFrame, position) -> None:
+        if self.tombstones:
+            batch = with_tombstones(batch, self.key_cols)
+        else:
+            batch = batch.withColumn("__tombstone", F.lit(False))
+        self._commit(batch, position)
 
-    def _commit_changes(self, batch: DataFrame, batch_id: int) -> None:
-        self._commit(with_tombstones(batch, self.key_cols), batch_id)
-
-    def _commit(self, batch: DataFrame, _batch_id) -> int:
+    def _commit(self, batch: DataFrame, position, snapshot_key=None) -> None:
+        """Commit one batch at ``position`` (None for snapshot pages, whose
+        progress is their ``snapshot_key``, not an index). The Observation
+        is filled by the sink's write job."""
         observed, obs = observed_batch(batch)
         t0 = time.time()
-        pos_row = observed.agg(F.max("change_seq")).collect()[0]
-        n = self.sink.commit_batch(observed, self.batches_committed, pos_row[0])
-        if not n:
-            return 0
-        m = report_batch(obs.get, self.batches_committed, time.time() - t0, self.reporters)
+        batch_id = self.sink.commit_next(observed, position, snapshot_key)
+        m = report_batch(obs.get, batch_id, time.time() - t0, self.reporters)
         self.batches_committed += 1
         self.rows_committed += m.rows
-        return m.rows
 
 
 def foreach_batch_writer(sink: TransactionalDirSink, idx_col: str = "change_seq"):
@@ -106,12 +108,12 @@ def foreach_batch_writer(sink: TransactionalDirSink, idx_col: str = "change_seq"
     function committing every micro-batch through the transactional sink.
     Spark's checkpoint provides replay; the sink's batch-id idempotence makes
     the replay exactly-once (T2) — the pair is the reference's
-    data+progress Kafka transaction."""
+    data+progress Kafka transaction. A micro-batch costs two jobs: one for
+    its row count and position, and the write."""
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        pos = batch.agg(F.max(idx_col)).collect()[0][0]
-        sink.commit_batch(batch, batch_id, pos)
+        head = summarize(batch, F.count(F.lit(1)).alias("n"), F.max(idx_col).alias("pos"))
+        if head["n"]:
+            sink.commit_batch(batch, batch_id, head["pos"])
 
     return write

@@ -16,10 +16,16 @@ for a transactional producer keyed by batch id gives the Kafka version):
 
 1. write the batch under ``_staging/batch=<id>/`` (side-effect-free retry);
 2. atomically rename into place;
-3. append the progress record ``(topic, kind, position, batch_id)`` to the
-   manifest — readers only see directories listed in the manifest, so a
-   crash between 2 and 3 is invisible and a replay of the same batch id is
-   idempotent (stage dir overwritten, manifest append deduped by batch id).
+3. append the progress record ``(topic, kind, position, batch_id)``, plus
+   a snapshot page's resume key, to the manifest — readers only see
+   directories listed in the manifest, so a crash between 2 and 3 is
+   invisible and a replay of the same batch id is idempotent (stage dir
+   overwritten, manifest append deduped by batch id).
+
+A record is committed only once its whole line, newline included, is in the
+manifest. A crash in the middle of step 3 leaves a torn last line: readers
+skip it, and the next append cuts it off first, so the batch is simply
+replayed under its id.
 """
 
 from __future__ import annotations
@@ -31,8 +37,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from sqlserver_cdc_to_kafka_spark.streaming.change_feed import ProgressEntry
 
 
 @dataclass
@@ -59,7 +63,17 @@ class TransactionalDirSink:
         if not os.path.exists(self.manifest_path):
             return []
         with open(self.manifest_path) as f:
-            return [json.loads(line) for line in f]
+            text = f.read()
+        # a last line without its newline is an append cut short by a crash
+        return [json.loads(line) for line in text[: text.rfind("\n") + 1].splitlines()]
+
+    def _append(self, *records: dict) -> None:
+        """Append whole records, first cutting off a torn last line so that
+        the new record is not glued onto it."""
+        with open(self.manifest_path, "ab+") as f:
+            f.seek(0)
+            f.truncate(f.read().rfind(b"\n") + 1)
+            f.write(b"".join(json.dumps(r).encode() + b"\n" for r in records))
 
     def committed_batches(self) -> dict[int, dict]:
         out: dict[int, dict] = {}
@@ -67,23 +81,49 @@ class TransactionalDirSink:
             out[rec["batch_id"]] = rec  # last write wins (replay supersedes)
         return out
 
-    def last_progress(self, kind: str = "change_rows"):
-        """T2 resume point: last committed position FOR THIS KIND (the
-        compacted-progress-topic replay, progress_tracking.py:235-258).
-        Batches without a position (snapshot pages) are skipped — snapshot
-        progress is tracked by key, not index (constants.py:38-39). A reset
-        tombstone (see ``reset_progress``) is a hard boundary for ITS kind
-        only: a reset scoped to snapshot_rows must not wipe the change_rows
-        resume point (per-(topic, kind) progress, like the reference)."""
-        resume = None
+    def _epoch(self, kind: str = "change_rows") -> list[dict]:
+        """Records of ``kind`` since its last reset tombstone, in append
+        order. A reset tombstone (see ``reset_progress``) is a hard boundary
+        for ITS kind only: a reset scoped to snapshot_rows must not wipe the
+        change_rows resume point (per-(topic, kind) progress, like the
+        reference)."""
+        out: list[dict] = []
         for rec in self._records():
             if rec.get("kind") != kind:
                 continue
             if rec.get("tombstone"):
-                resume = None  # epoch boundary: nothing before it counts
-            elif rec["position"] is not None:
-                resume = rec["position"]
-        return resume
+                out.clear()
+            else:
+                out.append(rec)
+        return out
+
+    def last_progress(self, kind: str = "change_rows"):
+        """T2 resume point: last committed position FOR THIS KIND (the
+        compacted-progress-topic replay, progress_tracking.py:235-258).
+        Batches without a position (snapshot pages) are skipped — snapshot
+        progress is tracked by key, not index (constants.py:38-39)."""
+        positions = [r["position"] for r in self._epoch(kind) if r["position"] is not None]
+        return positions[-1] if positions else None
+
+    def last_snapshot_key(self) -> tuple | None:
+        """Snapshot resume point: the lowest key committed so far in the
+        current epoch (pages run high → low), or None before the first page
+        (tracked_tables.py:219-256)."""
+        keys = [r["snapshot_key"] for r in self._epoch() if "snapshot_key" in r]
+        return tuple(keys[-1]) if keys else None
+
+    def _record(self, batch_id: int, position, snapshot_key=None, **extra) -> dict:
+        """One manifest line; ``extra`` adds fields or overrides ``kind``."""
+        rec = {
+            "topic": self.topic,
+            "kind": "change_rows",
+            "position": position,
+            "batch_id": batch_id,
+            **extra,
+        }
+        if snapshot_key is not None:
+            rec["snapshot_key"] = list(snapshot_key)
+        return rec
 
     def _current_epoch_batch_ids(self, kind: str = "change_rows") -> set[int]:
         """Batch ids committed since the last reset tombstone of this kind —
@@ -91,22 +131,16 @@ class TransactionalDirSink:
         at batch id 0; ids from BEFORE the tombstone must not shadow it
         (they'd silently drop every re-ingested batch), so the duplicate
         check is epoch-local."""
-        ids: set[int] = set()
-        for rec in self._records():
-            if rec.get("kind") != kind:
-                continue
-            if rec.get("tombstone"):
-                ids.clear()
-            else:
-                ids.add(rec["batch_id"])
-        return ids
+        return {r["batch_id"] for r in self._epoch(kind)}
 
-    def commit_batch(self, batch: DataFrame, batch_id: int, position) -> bool:
+    def commit_batch(self, batch: DataFrame, batch_id: int, position, snapshot_key=None) -> bool:
         """Idempotent commit: returns False (no-op) if this batch id is
-        already committed in the current epoch — the crash-replay path.
+        already committed in the current epoch — the crash-replay path of a
+        writer whose ids are replayed, like Spark's foreachBatch.
         A replay of a pre-reset batch id is NOT a duplicate: it overwrites
         the old data directory and its manifest record supersedes the old
-        one (last write wins), which is exactly re-ingest-from-scratch."""
+        one (last write wins), which is exactly re-ingest-from-scratch.
+        ``snapshot_key`` is a snapshot page's resume key, recorded with it."""
         if batch_id in self._current_epoch_batch_ids("change_rows"):
             return False
         stage = os.path.join(self.root, "_staging", f"batch={batch_id}")
@@ -117,25 +151,18 @@ class TransactionalDirSink:
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(stage, final)
-        with open(self.manifest_path, "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "topic": self.topic,
-                        "kind": "change_rows",
-                        "position": position,
-                        "batch_id": batch_id,
-                    }
-                )
-                + "\n"
-            )
+        self._append(self._record(batch_id, position, snapshot_key))
         return True
 
-    def progress_entries(self) -> list[ProgressEntry]:
-        return [
-            ProgressEntry(r["topic"], r["kind"], r["position"], r["batch_id"])
-            for r in self.committed_batches().values()
-        ]
+    def commit_next(self, batch: DataFrame, position, snapshot_key=None) -> int:
+        """Commit under the first batch id free in the current epoch and
+        return it — for a writer that resumes from ``last_progress()`` and
+        ``last_snapshot_key()`` rather than replaying ids. A batch whose
+        commit crashed never reached the manifest, so its id is free again."""
+        batch_id = max(self._current_epoch_batch_ids(), default=-1) + 1
+        if not self.commit_batch(batch, batch_id, position, snapshot_key):
+            raise RuntimeError(f"batch id {batch_id} was committed by another writer")
+        return batch_id
 
     def reset_progress(self, kinds: tuple[str, ...] = ("change_rows",)) -> int:
         """progress_reset_tool analog (reference progress_reset_tool.py:12,
@@ -149,24 +176,14 @@ class TransactionalDirSink:
         if not existing:
             return 0
         next_id = max(r["batch_id"] for r in self.committed_batches().values()) + 1
-        n = 0
-        with open(self.manifest_path, "a") as f:
-            for kind in kinds:
-                if any(r["kind"] == kind for r in existing):
-                    f.write(
-                        json.dumps(
-                            {
-                                "topic": self.topic,
-                                "kind": kind,
-                                "position": None,
-                                "batch_id": next_id + n,
-                                "tombstone": True,
-                            }
-                        )
-                        + "\n"
-                    )
-                    n += 1
-        return n
+        reset = [k for k in kinds if any(r["kind"] == k for r in existing)]
+        self._append(
+            *(
+                self._record(next_id + i, None, kind=kind, tombstone=True)
+                for i, kind in enumerate(reset)
+            )
+        )
+        return len(reset)
 
     def read_committed(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
         """Read ONLY manifest-listed data (uncommitted staging invisible).
@@ -201,9 +218,9 @@ class TransactionalDirSink:
         atomically replace the batch directories with one compacted batch.
 
         Progress is preserved: the compacted batch takes the max committed
-        batch id and position, so resume semantics are unchanged. Returns
-        surviving row count. At scale this is the same one-shuffle
-        ``max_by`` with the output range-partitioned by key."""
+        batch id, position and snapshot key, so resume semantics are
+        unchanged. Returns surviving row count. At scale this is the same
+        one-shuffle ``max_by`` with the output range-partitioned by key."""
         from sqlserver_cdc_to_kafka_spark.operators.compaction import (
             last_value_per_key,
         )
@@ -227,7 +244,8 @@ class TransactionalDirSink:
         live = last.filter(~F.col(tombstone_col)).drop("__ordk")
 
         max_id = max(batches)
-        position = self.last_progress()  # capture BEFORE rewriting manifest
+        # capture BEFORE rewriting manifest
+        position, snapshot_key = self.last_progress(), self.last_snapshot_key()
         # crash-safe ordering: (1) write the compacted generation under a
         # fresh directory name, (2) atomically replace the manifest — THE
         # commit point: readers switch from the old dirs to the new one in
@@ -245,18 +263,7 @@ class TransactionalDirSink:
         os.rename(stage, final)
         tmp_manifest = self.manifest_path + ".tmp"
         with open(tmp_manifest, "w") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "topic": self.topic,
-                        "kind": "change_rows",
-                        "position": position,
-                        "batch_id": max_id,
-                        "path": gen_dir,
-                    }
-                )
-                + "\n"
-            )
+            f.write(json.dumps(self._record(max_id, position, snapshot_key, path=gen_dir)) + "\n")
         os.replace(tmp_manifest, self.manifest_path)  # commit point
         for b, rec in batches.items():
             d = os.path.join(self.root, "data", rec.get("path", f"batch={b}"))

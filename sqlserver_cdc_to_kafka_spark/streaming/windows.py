@@ -66,10 +66,12 @@ class scoped_shuffle_partitions:
 
 
 def parquet_row_count(path: str) -> int:
-    """Exact row count from the parquet footer — no data read."""
-    import pyarrow.parquet as pq
+    """Exact row count of a parquet file or dataset directory, summed from
+    the files' footers — no data read. Like Spark, a directory's files whose
+    names start with ``_`` or ``.`` (``_SUCCESS``, checksums) are skipped."""
+    import pyarrow.dataset as ds
 
-    return pq.ParquetFile(path).metadata.num_rows
+    return ds.dataset(path, format="parquet").count_rows()
 
 
 def drained(df: DataFrame, scratch: str) -> DataFrame:

@@ -79,22 +79,50 @@ def test_pipeline_resume_after_crash(spark, sf_dir, tmp_path):
     orders, feed, sink, rep, run = _setup(spark, sf_dir, tmp_path, batch_size=500)
     total_first = run.run()
 
-    # "restart": a new PipelineRun against the same sink must commit NOTHING
-    # new for changes (progress replay) — only the snapshot re-pages (the
-    # reference re-snapshots only on instance change; our harness always
-    # pages, so count only change rows).
+    # "restart": a new PipelineRun against the same sink resumes the
+    # snapshot from its last key and the changes from their last position
+    # (both in the manifest), so a run with nothing new commits NOTHING
     orders2, feed2, sink2, rep2, run2 = _setup(spark, sf_dir, tmp_path, batch_size=500)
-    run2.run()
-    change_rows_second = sum(
-        m.rows for m in rep2.emitted if m.snapshots == 0 and m.rows > 0
-    )
-    assert change_rows_second == 0  # no change row re-emitted after resume
+    assert run2.run() == 0
+    assert run2.batches_committed == 0 and rep2.emitted == []
+    assert sink2.read_committed(spark).count() == total_first
+
+    # changes that arrive later are committed once each, under fresh ids
+    more = feed.withColumn("change_seq", F.col("change_seq") + 1_000_000)
+    run3 = PipelineRun(spark, orders, feed.unionByName(more), ["o_orderkey"], sink, [], 500)
+    n_deletes = feed.filter(F.col("__operation") == OP_DELETE).count()
+    assert run3.run() == feed.count() + n_deletes
+    out = sink.read_committed(spark).filter(F.col("__operation") != 0)
+    changes = out.filter(~F.col("__tombstone"))
+    assert changes.count() == changes.select("change_seq").distinct().count() == 2 * feed.count()
+
+
+def test_per_batch_job_budget(spark, sf_dir, tmp_path):
+    """A drain runs at most three Spark jobs per committed batch, plus four
+    for the final empty page and poll. The pipeline's own share is one job
+    per page or poll (row count and position or resume key in one
+    Observation) and one write per commit; the rest is the fixture feed's
+    own shuffle, re-run by every poll. No job recomputes a position that
+    the batch already gave."""
+    orders, feed, sink, rep, run = _setup(spark, sf_dir, tmp_path, batch_size=500)
+    sc = spark.sparkContext
+    group = f"job-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "per-batch job budget")
+    try:
+        total = run.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert total == sink.read_committed(spark).count()
+    assert run.batches_committed >= 6  # several pages and change batches
+    assert jobs <= 3 * run.batches_committed + 4
 
 
 def test_sink_log_compaction(spark, sf_dir, tmp_path):
     orders, feed, sink, rep, run = _setup(spark, sf_dir, tmp_path)
     run.run()
     resume_before = sink.last_progress()
+    snapshot_key_before = sink.last_snapshot_key()
     n_batches_before = len(sink.committed_batches())
     assert n_batches_before > 1
 
@@ -107,8 +135,9 @@ def test_sink_log_compaction(spark, sf_dir, tmp_path):
     out = sink.read_committed(spark)
     assert out.count() == n_live
     assert out.select("o_orderkey").distinct().count() == n_live
-    # compaction must not move the resume point
+    # compaction must not move either resume point
     assert sink.last_progress() == resume_before
+    assert sink.last_snapshot_key() == snapshot_key_before is not None
     assert len(sink.committed_batches()) == 1
 
     # deleted keys are really gone; updated keys carry the updated status
@@ -159,13 +188,23 @@ def test_foreachbatch_binding_with_readstream(spark, sf_dir, tmp_path):
         shutil.copyfile(next(stage.glob("part-*.parquet")), src / f"{i}.parquet")
 
     sink = TransactionalDirSink(str(tmp_path / "out"), "events")
+    writer = foreach_batch_writer(sink)
+    jobs_per_batch: list[int] = []
+
+    def counted(batch, batch_id):
+        # one job for the row count and position, one for the write
+        sc = batch.sparkSession.sparkContext
+        group = f"foreach-batch-{len(jobs_per_batch)}-{tmp_path.name}"
+        sc.setJobGroup(group, "foreach_batch_writer")
+        writer(batch, batch_id)
+        jobs_per_batch.append(len(sc.statusTracker().getJobIdsForGroup(group)))
 
     def run_once():
         q = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
-            .writeStream.foreachBatch(foreach_batch_writer(sink))
+            .writeStream.foreachBatch(counted)
             .option("checkpointLocation", str(ckpt))
             .trigger(availableNow=True)
             .start()
@@ -173,6 +212,7 @@ def test_foreachbatch_binding_with_readstream(spark, sf_dir, tmp_path):
         q.awaitTermination()
 
     run_once()
+    assert jobs_per_batch == [2, 2]
     n1 = sink.read_committed(spark).count()
     assert n1 == ev.count()
     run_once()  # restart with nothing new: no dupes

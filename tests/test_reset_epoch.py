@@ -23,14 +23,13 @@ from sqlserver_cdc_to_kafka_spark.streaming.change_feed import MicroBatcher
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
 
 
-def _run_batcher(feed, sink, topic):
-    def write(batch, bid):
-        sink.commit_batch(
-            batch, bid, batch.agg(F.max("change_seq")).collect()[0][0]
-        )
-
-    mb = MicroBatcher(feed, topic, batch_size=700, sink=write)
-    mb._offset = sink.last_progress()
+def _run_batcher(feed, sink):
+    mb = MicroBatcher(
+        feed,
+        batch_size=700,
+        sink=sink.commit_next,
+        offset=sink.last_progress(),
+    )
     return mb.run_to_completion()
 
 
@@ -42,7 +41,7 @@ def test_sink_attached_rerun_after_reset_reingests_everything(
     max_seq = feed.agg(F.max("change_seq")).collect()[0][0]
     sink = TransactionalDirSink(str(tmp_path / "t"), "t")
 
-    assert _run_batcher(feed, sink, "t") == n_feed
+    assert _run_batcher(feed, sink) == n_feed
     assert sink.last_progress() == max_seq
 
     assert sink.reset_progress() == 1
@@ -52,7 +51,7 @@ def test_sink_attached_rerun_after_reset_reingests_everything(
     # restart at batch_id 0; every one must commit (not be dropped as a
     # pre-reset duplicate), and the resume point must advance past the
     # tombstone to the re-ingested position.
-    assert _run_batcher(feed, sink, "t") == n_feed
+    assert _run_batcher(feed, sink) == n_feed
     assert sink.last_progress() == max_seq
     # the re-ingested batches supersede the pre-reset ones: the table holds
     # the corpus exactly once
@@ -68,7 +67,7 @@ def test_tombstone_only_bounds_its_own_kind(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 2000)
     max_seq = feed.agg(F.max("change_seq")).collect()[0][0]
     sink = TransactionalDirSink(str(tmp_path / "t"), "t")
-    _run_batcher(feed, sink, "t")
+    _run_batcher(feed, sink)
 
     # hand-write a snapshot_rows record then reset ONLY snapshot_rows
     with open(sink.manifest_path, "a") as f:

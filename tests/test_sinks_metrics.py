@@ -3,12 +3,16 @@
 
 from __future__ import annotations
 
+import builtins
 import json
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.fixtures.cdc_events import cdc_events
 from sqlserver_cdc_to_kafka_spark.streaming.change_feed import MicroBatcher
+from sqlserver_cdc_to_kafka_spark.streaming import sinks
 from sqlserver_cdc_to_kafka_spark.streaming.metrics import (
     AccumulatingReporter,
     LocalFileReporter,
@@ -17,7 +21,9 @@ from sqlserver_cdc_to_kafka_spark.streaming.metrics import (
     observed_batch,
     report_batch,
 )
+from sqlserver_cdc_to_kafka_spark.streaming.pipeline_run import PipelineRun
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
+from sqlserver_cdc_to_kafka_spark.tables import load_table
 
 
 def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
@@ -27,11 +33,7 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
     n_feed = feed.count()
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
 
-    def write(batch, batch_id):
-        pos = batch.agg(F.max("change_seq")).collect()[0][0]
-        assert sink.commit_batch(batch, batch_id, pos)
-
-    mb = MicroBatcher(feed, "orders", batch_size=400, sink=write)
+    mb = MicroBatcher(feed, batch_size=400, sink=sink.commit_next)
     total = mb.run_to_completion()
     assert total == n_feed
 
@@ -50,9 +52,7 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
     # resume point = max committed index; a new batcher starting there sees 0
     resume = sink.last_progress()
     assert resume == feed.agg(F.max("change_seq")).collect()[0][0]
-    mb2 = MicroBatcher(feed, "orders", batch_size=400)
-    mb2._offset = resume
-    assert mb2.run_once() == 0
+    assert MicroBatcher(feed, batch_size=400, offset=resume).run_once() == 0
 
 
 def test_staged_but_uncommitted_batch_is_invisible(spark, sf_dir, tmp_path):
@@ -69,6 +69,121 @@ def test_staged_but_uncommitted_batch_is_invisible(spark, sf_dir, tmp_path):
     assert sink.commit_batch(feed.limit(7), 1, position=106)
     assert set(sink.committed_batches()) == {0, 1}
     assert sink.read_committed(spark).count() == 107
+
+
+class _Crash(Exception):
+    """The process dying at one step of a commit."""
+
+
+class _TornWriter:
+    """A manifest handle that dies halfway through its next write, leaving
+    a torn last line, as a crash in the middle of the append would."""
+
+    def __init__(self, f) -> None:
+        self.f = f
+
+    def __getattr__(self, name):
+        return getattr(self.f, name)
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.f.close()
+
+    def write(self, data):
+        self.f.write(data[: len(data) // 2])
+        self.f.flush()
+        raise _Crash("mid-append")
+
+
+def _crash_commit(monkeypatch, step: str, n: int) -> None:
+    """Make the ``n``-th ``commit_batch`` die at ``step``: after the staged
+    write (the rename fails), after the rename (opening the manifest for
+    the append fails), or in the middle of the append."""
+    real_rename, real_open = os.rename, builtins.open
+    seen = {"rename": 0, "append": 0}
+
+    def rename(src, dst):
+        seen["rename"] += 1
+        if step == "staged" and seen["rename"] == n:
+            raise _Crash(step)
+        return real_rename(src, dst)
+
+    def open_(path, mode="r", *args, **kwargs):
+        f = real_open(path, mode, *args, **kwargs)
+        if "a" not in mode:
+            return f
+        seen["append"] += 1
+        if seen["append"] != n or step == "staged":
+            return f
+        if step == "renamed":
+            f.close()
+            raise _Crash(step)
+        return _TornWriter(f)
+
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(sinks, "open", open_, raising=False)
+
+
+@pytest.mark.parametrize("step", ["staged", "renamed", "mid-append"])
+def test_crash_at_each_commit_step_resumes_exactly_once(
+    spark, sf_dir, tmp_path, monkeypatch, step
+):
+    """A pipeline dies in its fourth commit (a change batch, after a page,
+    a change batch and a page); a restarted ``PipelineRun`` over the same
+    sink resumes both the snapshot and the changes, and the topic then
+    holds every order and every change exactly once."""
+    orders = load_table(spark, sf_dir, "orders")
+    feed = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 3000)
+    n_orders, n_feed = orders.count(), feed.count()
+    n_deletes = feed.filter(F.col("__operation") == 1).count()
+    root = str(tmp_path / "out")
+
+    def run():
+        sink = TransactionalDirSink(root, "orders")
+        return sink, PipelineRun(spark, orders, feed, ["o_orderkey"], sink, [], 400)
+
+    _crash_commit(monkeypatch, step, 4)
+    with pytest.raises(_Crash):
+        run()[1].run()
+    monkeypatch.undo()
+
+    # the restarted process: the crashed batch never committed
+    sink, restarted = run()
+    assert set(sink.committed_batches()) == {0, 1, 2}
+    assert sink.last_snapshot_key() is not None and sink.last_progress() is not None
+    before = sink.read_committed(spark).count()
+    assert restarted.run() == n_orders + n_feed + n_deletes - before
+
+    out = sink.read_committed(spark)
+    snap = out.filter(F.col("__operation") == 0)
+    changes = out.filter((F.col("__operation") != 0) & ~F.col("__tombstone"))
+    assert snap.count() == snap.select("o_orderkey").distinct().count() == n_orders
+    assert changes.count() == changes.select("change_seq").distinct().count() == n_feed
+    assert out.filter(F.col("__tombstone")).count() == n_deletes
+    assert sink.last_progress() == feed.agg(F.max("change_seq")).collect()[0][0]
+    with open(sink.manifest_path) as f:
+        text = f.read()
+    assert text.endswith("\n")
+    assert [json.loads(line)["batch_id"] for line in text.splitlines()] == sorted(
+        sink.committed_batches()
+    )
+
+
+def test_reset_progress_cuts_off_a_torn_manifest_line(tmp_path):
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    whole = {"topic": "orders", "kind": "change_rows", "position": 41, "batch_id": 0}
+    torn = json.dumps({**whole, "position": 99, "batch_id": 1})
+    with open(sink.manifest_path, "w") as f:
+        f.write(json.dumps(whole) + "\n" + torn[: len(torn) // 2])
+    assert sink.last_progress() == 41
+    assert set(sink.committed_batches()) == {0}
+    assert sink.reset_progress() == 1
+    with open(sink.manifest_path) as f:
+        records = [json.loads(line) for line in f]
+    assert [r["batch_id"] for r in records] == [0, 1]
+    assert records[1]["tombstone"] and sink.last_progress() is None
 
 
 def test_observed_metrics_and_reporters(spark, sf_dir, tmp_path):
@@ -218,10 +333,7 @@ def test_streaming_query_listener_captures_progress(spark, sf_dir, tmp_path):
 def test_time_travel_read(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 3000)
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
-    mb = MicroBatcher(
-        feed, "orders", batch_size=400,
-        sink=lambda b, i: sink.commit_batch(b, i, b.agg(F.max("change_seq")).collect()[0][0]),
-    )
+    mb = MicroBatcher(feed, batch_size=400, sink=sink.commit_next)
     mb.run_to_completion()
     n_all = sink.read_committed(spark).count()
     n_b0 = sink.read_committed(spark, as_of=0).count()

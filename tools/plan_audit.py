@@ -282,12 +282,12 @@ MIXED_PERSIST_RELEASE_BY_CONTRACT: dict[str, str] = {
     ),
     "streaming/change_feed.py:run_once": (
         "try/finally releases the SAME persisted micro-batch frame "
-        "`batch` after the sink write + progress computation drain it"
+        "`batch` after its count/position job and the sink write drain it"
     ),
     "streaming/snapshot_stream.py:next_page": (
         "the empty-page branch releases the SAME cached `page` frame; a "
         "non-empty page is RETURNED cached and released by the caller "
-        "(streaming/pipeline_run.py:68, the audit's one net-negative "
+        "(streaming/pipeline_run.py:75, the audit's one net-negative "
         "function) after the commit drains it"
     ),
 }
