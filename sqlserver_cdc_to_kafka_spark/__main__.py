@@ -24,9 +24,10 @@ surface (``python -m cdc_kafka``, reference ``options.py`` flag names,
     ... --reset-progress --topic-names T1,T2 [--progress-kind K] [--execute]
         the progress_reset_tool.py analog (progress_reset_tool.py:12):
         append tombstone progress records for the named topics' sinks under
-        --sink-dir so their next run starts from scratch; other topics keep
-        their offsets. Dry-run (report only) unless --execute is set, like
-        the reference.
+        --sink-dir so their next run starts kind K (``change_rows``,
+        ``snapshot_rows`` or ``all``) from scratch; other kinds and topics
+        keep their offsets. Dry-run (report only) unless --execute is set,
+        like the reference.
 
 Flags reuse the reference's names (``--db-row-batch-size``,
 ``--table-include-regex``, ``--topic-name-template``, …) so an operator of

@@ -76,8 +76,9 @@ class MicroBatcher:
     off; set it from the sink's ``last_progress()`` to resume. The sink
     callback gets ``(batch, position)``, where ``position`` is the batch's
     max index, so the sink can commit data and progress together
-    (main.py:319-350's transaction, restated) without recomputing it. Batch
-    ids are the sink's business (``TransactionalDirSink.commit_next``)."""
+    (main.py:319-350's transaction, restated) without recomputing it.
+    ``TransactionalDirSink.commit_batch`` is such a callback: the sink
+    assigns batch ids, and skips a batch whose position it already has."""
 
     feed: DataFrame
     idx_col: str = "change_seq"

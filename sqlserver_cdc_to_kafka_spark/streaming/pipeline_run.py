@@ -9,11 +9,12 @@ This is the package's one way to run a table: the CLI's pipeline mode and
 the benchmark both drive it, so every run gets the same manifest, resume
 point, tombstones and metrics. The sink's manifest is the only progress
 record: a run resumes its changes from ``sink.last_progress()`` and its
-snapshot from ``sink.last_snapshot_key()``, and takes each batch's id from
-the sink (``commit_next``), so a rerun after a crash or after new changes
-commits exactly what is missing. Each batch costs one job for its poll or
-page (row count and position or resume key, see ``metrics.summarize``) and
-one write job, which also fills its metrics."""
+snapshot from ``sink.last_snapshot_key()``, and the sink assigns each
+batch's id, so a rerun after a crash or after new changes commits exactly
+what is missing, and a reset of one progress kind re-runs only that kind.
+Each batch costs one job for its poll or page (row count and position or
+resume key, see ``metrics.summarize``) and one write job, which also fills
+its metrics."""
 
 from __future__ import annotations
 
@@ -94,10 +95,13 @@ class PipelineRun:
     def _commit(self, batch: DataFrame, position, snapshot_key=None) -> None:
         """Commit one batch at ``position`` (None for snapshot pages, whose
         progress is their ``snapshot_key``, not an index). The Observation
-        is filled by the sink's write job."""
+        is filled by the sink's write job. A replay (a second writer got
+        there first) runs no write, so its Observation would never fill."""
         observed, obs = observed_batch(batch)
         t0 = time.time()
-        batch_id = self.sink.commit_next(observed, position, snapshot_key)
+        batch_id = self.sink.commit_batch(observed, position, snapshot_key)
+        if batch_id is None:
+            return
         m = report_batch(obs.get, batch_id, time.time() - t0, self.reporters)
         self.batches_committed += 1
         self.rows_committed += m.rows
@@ -106,14 +110,16 @@ class PipelineRun:
 def foreach_batch_writer(sink: TransactionalDirSink, idx_col: str = "change_seq"):
     """The production binding (§3.1 Spark restatement): a foreachBatch
     function committing every micro-batch through the transactional sink.
-    Spark's checkpoint provides replay; the sink's batch-id idempotence makes
-    the replay exactly-once (T2) — the pair is the reference's
-    data+progress Kafka transaction. A micro-batch costs two jobs: one for
-    its row count and position, and the write."""
+    Spark's checkpoint provides replay, and a replayed micro-batch has the
+    same offsets, hence the same max ``idx_col``: the sink recognises it by
+    that position and skips it, which makes the replay exactly-once (T2) —
+    the pair is the reference's data+progress Kafka transaction. Spark's
+    batch id is not used; the sink assigns its own. A micro-batch costs two
+    jobs: one for its row count and position, and the write."""
 
-    def write(batch: DataFrame, batch_id: int) -> None:
+    def write(batch: DataFrame, _spark_batch_id: int) -> None:
         head = summarize(batch, F.count(F.lit(1)).alias("n"), F.max(idx_col).alias("pos"))
         if head["n"]:
-            sink.commit_batch(batch, batch_id, head["pos"])
+            sink.commit_batch(batch, head["pos"])
 
     return write

@@ -5,10 +5,9 @@ Reference behavior: every micro-batch's data messages AND per-topic progress
 records are produced inside ONE Kafka transaction (``main.py:319-350``,
 ``kafka.py:134-156``) — a crash never leaves data without progress or
 vice versa. Spark's Kafka sink alone is at-least-once, so the idiomatic
-restatement is ``foreachBatch`` + an idempotent, batch-id-keyed commit
-protocol — which is exactly what Structured Streaming's own file sink does
-with its manifest log, generalized here so any directory-backed format gets
-it.
+restatement is ``foreachBatch`` + an idempotent commit protocol — which is
+exactly what Structured Streaming's own file sink does with its manifest
+log, generalized here so any directory-backed format gets it.
 
 ``TransactionalDirSink`` implements that protocol without external
 dependencies (no Kafka broker in this environment; swapping ``_write_files``
@@ -16,16 +15,24 @@ for a transactional producer keyed by batch id gives the Kafka version):
 
 1. write the batch under ``_staging/batch=<id>/`` (side-effect-free retry);
 2. atomically rename into place;
-3. append the progress record ``(topic, kind, position, batch_id)``, plus
-   a snapshot page's resume key, to the manifest — readers only see
-   directories listed in the manifest, so a crash between 2 and 3 is
-   invisible and a replay of the same batch id is idempotent (stage dir
-   overwritten, manifest append deduped by batch id).
+3. append the progress record ``(topic, kind, position, batch_id)`` to the
+   manifest. A change batch is kind ``change_rows`` and its ``position`` is
+   its last change index; a snapshot page is kind ``snapshot_rows``, its
+   ``position`` is null and its ``snapshot_key`` is the page's low key.
+   Readers only see directories listed in the manifest, so a crash between
+   2 and 3 is invisible.
+
+Only the sink chooses batch ids, and it never reuses one: a new id is one
+more than the largest in the manifest, reset records included. A replay is
+recognised by its position instead: a change batch at or below the last
+committed position is already in the topic, so committing it again writes
+nothing. Progress is kept per ``(topic, kind)``, like the reference's
+progress topic, so a reset of one kind leaves the other's resume point.
 
 A record is committed only once its whole line, newline included, is in the
 manifest. A crash in the middle of step 3 leaves a torn last line: readers
-skip it, and the next append cuts it off first, so the batch is simply
-replayed under its id.
+skip it, and the next append cuts it off first. Each commit opens the
+manifest once, to read its records, pick the id and append.
 """
 
 from __future__ import annotations
@@ -39,10 +46,66 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _read(f) -> tuple[list[dict], int]:
+    """The manifest's whole records, in append order, and the offset where
+    they end. A last line without its newline is an append cut short by a
+    crash: it is no record, and ``_append`` cuts it off."""
+    f.seek(0)
+    data = f.read()
+    end = data.rfind(b"\n") + 1
+    return [json.loads(line) for line in data[:end].splitlines()], end
+
+
+def _append(f, end: int, *records: dict) -> None:
+    f.truncate(end)
+    f.write(b"".join(json.dumps(r).encode() + b"\n" for r in records))
+
+
+def _next_id(records: list[dict]) -> int:
+    """Ids are never reused: one more than the largest, reset records included."""
+    return max((r["batch_id"] for r in records), default=-1) + 1
+
+
+def _epoch(records: list[dict], kind: str) -> list[dict]:
+    """Records carrying ``kind``'s progress since its last reset record. A
+    reset bounds its own kind only (per-(topic, kind) progress, like the
+    reference). A compacted generation carries both kinds' resume points."""
+    out: list[dict] = []
+    for rec in records:
+        if rec.get("tombstone"):
+            if rec["kind"] == kind:
+                out.clear()
+        elif rec["kind"] == kind or "path" in rec:
+            out.append(rec)
+    return out
+
+
+def _last_position(records: list[dict], kind: str = "change_rows"):
+    positions = [r["position"] for r in _epoch(records, kind) if r["kind"] == kind]
+    return next((p for p in reversed(positions) if p is not None), None)
+
+
+def _visible(records: list[dict]) -> list[dict]:
+    """The data records a reader sees. Right after a reset, the kind's
+    committed data stays visible; the rerun's first batch of that kind
+    supersedes all of it, whatever its batch sizes were. A compacted
+    generation is always read."""
+    out, reset = [], set()
+    for rec in records:
+        if rec.get("tombstone"):
+            reset.add(rec["kind"])
+            continue
+        if rec["kind"] in reset:
+            reset.discard(rec["kind"])
+            out = [r for r in out if r["kind"] != rec["kind"] or "path" in r]
+        out.append(rec)
+    return out
+
+
 @dataclass
 class TransactionalDirSink:
     """Exactly-once directory sink: data files + progress manifest commit
-    together, keyed by batch id (T2)."""
+    together, under ids the sink assigns (T2)."""
 
     root: str
     topic: str
@@ -56,150 +119,92 @@ class TransactionalDirSink:
         return os.path.join(self.root, "_manifest.jsonl")
 
     def _records(self) -> list[dict]:
-        """Manifest records in append order — the replay-the-progress-topic
-        view. Epochs are positional: a reset tombstone of kind K starts a
-        new epoch FOR KIND K; records of kind K after it belong to the new
-        epoch. No stored epoch field, so legacy manifests parse the same."""
         if not os.path.exists(self.manifest_path):
             return []
-        with open(self.manifest_path) as f:
-            text = f.read()
-        # a last line without its newline is an append cut short by a crash
-        return [json.loads(line) for line in text[: text.rfind("\n") + 1].splitlines()]
-
-    def _append(self, *records: dict) -> None:
-        """Append whole records, first cutting off a torn last line so that
-        the new record is not glued onto it."""
-        with open(self.manifest_path, "ab+") as f:
-            f.seek(0)
-            f.truncate(f.read().rfind(b"\n") + 1)
-            f.write(b"".join(json.dumps(r).encode() + b"\n" for r in records))
+        with open(self.manifest_path, "rb") as f:
+            return _read(f)[0]
 
     def committed_batches(self) -> dict[int, dict]:
-        out: dict[int, dict] = {}
-        for rec in self._records():
-            out[rec["batch_id"]] = rec  # last write wins (replay supersedes)
-        return out
-
-    def _epoch(self, kind: str = "change_rows") -> list[dict]:
-        """Records of ``kind`` since its last reset tombstone, in append
-        order. A reset tombstone (see ``reset_progress``) is a hard boundary
-        for ITS kind only: a reset scoped to snapshot_rows must not wipe the
-        change_rows resume point (per-(topic, kind) progress, like the
-        reference)."""
-        out: list[dict] = []
-        for rec in self._records():
-            if rec.get("kind") != kind:
-                continue
-            if rec.get("tombstone"):
-                out.clear()
-            else:
-                out.append(rec)
-        return out
+        """Every manifest record, reset records included, by batch id."""
+        return {rec["batch_id"]: rec for rec in self._records()}
 
     def last_progress(self, kind: str = "change_rows"):
         """T2 resume point: last committed position FOR THIS KIND (the
         compacted-progress-topic replay, progress_tracking.py:235-258).
-        Batches without a position (snapshot pages) are skipped — snapshot
-        progress is tracked by key, not index (constants.py:38-39)."""
-        positions = [r["position"] for r in self._epoch(kind) if r["position"] is not None]
-        return positions[-1] if positions else None
+        Snapshot pages carry no position: snapshot progress is tracked by
+        key, not index (constants.py:38-39), see ``last_snapshot_key``."""
+        return _last_position(self._records(), kind)
 
     def last_snapshot_key(self) -> tuple | None:
-        """Snapshot resume point: the lowest key committed so far in the
-        current epoch (pages run high → low), or None before the first page
-        (tracked_tables.py:219-256)."""
-        keys = [r["snapshot_key"] for r in self._epoch() if "snapshot_key" in r]
+        """Snapshot resume point: the lowest key committed so far since the
+        last snapshot reset (pages run high → low), or None before the first
+        page (tracked_tables.py:219-256)."""
+        epoch = _epoch(self._records(), "snapshot_rows")
+        keys = [r["snapshot_key"] for r in epoch if "snapshot_key" in r]
         return tuple(keys[-1]) if keys else None
 
-    def _record(self, batch_id: int, position, snapshot_key=None, **extra) -> dict:
-        """One manifest line; ``extra`` adds fields or overrides ``kind``."""
-        rec = {
-            "topic": self.topic,
-            "kind": "change_rows",
-            "position": position,
-            "batch_id": batch_id,
-            **extra,
-        }
+    def _record(self, batch_id: int, kind: str, position, snapshot_key=None, **extra) -> dict:
+        rec = dict(topic=self.topic, kind=kind, position=position, batch_id=batch_id, **extra)
         if snapshot_key is not None:
             rec["snapshot_key"] = list(snapshot_key)
         return rec
 
-    def _current_epoch_batch_ids(self, kind: str = "change_rows") -> set[int]:
-        """Batch ids committed since the last reset tombstone of this kind —
-        the idempotence scope. After a reset, a from-scratch rerun restarts
-        at batch id 0; ids from BEFORE the tombstone must not shadow it
-        (they'd silently drop every re-ingested batch), so the duplicate
-        check is epoch-local."""
-        return {r["batch_id"] for r in self._epoch(kind)}
-
-    def commit_batch(self, batch: DataFrame, batch_id: int, position, snapshot_key=None) -> bool:
-        """Idempotent commit: returns False (no-op) if this batch id is
-        already committed in the current epoch — the crash-replay path of a
-        writer whose ids are replayed, like Spark's foreachBatch.
-        A replay of a pre-reset batch id is NOT a duplicate: it overwrites
-        the old data directory and its manifest record supersedes the old
-        one (last write wins), which is exactly re-ingest-from-scratch.
-        ``snapshot_key`` is a snapshot page's resume key, recorded with it."""
-        if batch_id in self._current_epoch_batch_ids("change_rows"):
-            return False
-        stage = os.path.join(self.root, "_staging", f"batch={batch_id}")
-        final = os.path.join(self.root, "data", f"batch={batch_id}")
-        if os.path.exists(stage):
-            shutil.rmtree(stage)  # leftover from a crashed attempt
-        batch.write.mode("overwrite").parquet(stage)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(stage, final)
-        self._append(self._record(batch_id, position, snapshot_key))
-        return True
-
-    def commit_next(self, batch: DataFrame, position, snapshot_key=None) -> int:
-        """Commit under the first batch id free in the current epoch and
-        return it — for a writer that resumes from ``last_progress()`` and
-        ``last_snapshot_key()`` rather than replaying ids. A batch whose
-        commit crashed never reached the manifest, so its id is free again."""
-        batch_id = max(self._current_epoch_batch_ids(), default=-1) + 1
-        if not self.commit_batch(batch, batch_id, position, snapshot_key):
-            raise RuntimeError(f"batch id {batch_id} was committed by another writer")
+    def commit_batch(self, batch: DataFrame, position, snapshot_key=None) -> int | None:
+        """Commit ``batch`` under the next batch id and return that id. A
+        batch with a ``snapshot_key`` is a snapshot page (kind
+        ``snapshot_rows``, no position); any other is a change batch at
+        ``position``, its last change index. Positions increase from batch
+        to batch, so a change batch at or below ``last_progress()`` is a
+        replay (a restarted writer, or Spark re-running a micro-batch): it
+        is already in the topic, and this returns None without writing. A
+        commit that crashed never reached the manifest, so its id is the
+        next one again and its leftover directories are overwritten."""
+        kind = "change_rows" if snapshot_key is None else "snapshot_rows"
+        with open(self.manifest_path, "ab+") as f:
+            records, end = _read(f)
+            last = _last_position(records)
+            if kind == "change_rows" and None not in (position, last) and position <= last:
+                return None
+            batch_id = _next_id(records)
+            stage = os.path.join(self.root, "_staging", f"batch={batch_id}")
+            final = os.path.join(self.root, "data", f"batch={batch_id}")
+            # a crashed attempt's leftovers: "overwrite" replaces the staged
+            # directory, and a renamed one is removed before the rename
+            batch.write.mode("overwrite").parquet(stage)
+            if os.path.exists(final):
+                shutil.rmtree(final)
+            os.rename(stage, final)
+            _append(f, end, self._record(batch_id, kind, position, snapshot_key))
         return batch_id
 
     def reset_progress(self, kinds: tuple[str, ...] = ("change_rows",)) -> int:
         """progress_reset_tool analog (reference progress_reset_tool.py:12,
         progress_tracking.py reset_progress): append a *tombstone* progress
-        record per (topic, kind) — position=None, a fresh batch-id epoch —
-        so replaying the log yields no resume point and the next run starts
-        from scratch. Data files are untouched (same as the reference: only
-        the progress topic is rewritten) and other topics' sinks never see
+        record per (topic, kind) with records since its last reset, so
+        replaying the log yields no resume point for that kind and the next
+        run starts it from scratch. Data files are untouched (same as the
+        reference: only the progress topic is rewritten; see ``_visible``
+        for when a rerun supersedes them) and other topics' sinks never see
         it. Returns the number of tombstones written."""
-        existing = [r for r in self.committed_batches().values() if r["kind"] in kinds]
-        if not existing:
-            return 0
-        next_id = max(r["batch_id"] for r in self.committed_batches().values()) + 1
-        reset = [k for k in kinds if any(r["kind"] == k for r in existing)]
-        self._append(
-            *(
-                self._record(next_id + i, None, kind=kind, tombstone=True)
-                for i, kind in enumerate(reset)
-            )
-        )
+        with open(self.manifest_path, "ab+") as f:
+            records, end = _read(f)
+            reset = [k for k in kinds if _epoch(records, k)]
+            tombs = enumerate(reset, _next_id(records))
+            _append(f, end, *(self._record(i, k, None, tombstone=True) for i, k in tombs))
         return len(reset)
 
     def read_committed(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
-        """Read ONLY manifest-listed data (uncommitted staging invisible).
-        Records may carry an explicit ``path`` (compacted generations).
+        """Read ONLY manifest-listed data (uncommitted staging invisible),
+        by the rule in ``_visible``. Records may carry an explicit ``path``
+        (compacted generations).
 
         ``as_of``: time travel — read the table as it was after batch id
         ``as_of`` committed (later batches invisible). Compaction collapses
         history, so travel only reaches past the last compacted generation."""
-        batches = self.committed_batches()
-        if as_of is not None:
-            batches = {b: r for b, r in batches.items() if b <= as_of}
-        # progress-reset tombstones carry no data directory
-        batches = {b: r for b, r in batches.items() if not r.get("tombstone")}
+        records = [r for r in self._records() if as_of is None or r["batch_id"] <= as_of]
         dirs = [
-            os.path.join(self.root, "data", batches[b].get("path", f"batch={b}"))
-            for b in sorted(batches)
+            os.path.join(self.root, "data", r.get("path", f"batch={r['batch_id']}"))
+            for r in _visible(records)
         ]
         if not dirs:
             raise ValueError("no committed batches" + (f" at or before {as_of}" if as_of is not None else ""))
@@ -263,7 +268,8 @@ class TransactionalDirSink:
         os.rename(stage, final)
         tmp_manifest = self.manifest_path + ".tmp"
         with open(tmp_manifest, "w") as f:
-            f.write(json.dumps(self._record(max_id, position, snapshot_key, path=gen_dir)) + "\n")
+            rec = self._record(max_id, "change_rows", position, snapshot_key, path=gen_dir)
+            f.write(json.dumps(rec) + "\n")
         os.replace(tmp_manifest, self.manifest_path)  # commit point
         for b, rec in batches.items():
             d = os.path.join(self.root, "data", rec.get("path", f"batch={b}"))

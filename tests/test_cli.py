@@ -98,6 +98,38 @@ def test_pipeline_mode_resumes_and_reset_progress_acts_on_it(
     assert TransactionalDirSink(first["path"], "orders").last_progress() is None
 
 
+@pytest.mark.parametrize("kind", ["snapshot_rows", "change_rows"])
+def test_reset_of_one_progress_kind_reruns_only_that_kind(
+    spark, sf_dir, tmp_path, capsys, kind
+):
+    """On a topic the pipeline wrote, ``--progress-kind`` picks what the
+    next run does over: a snapshot reset re-pages every order and commits no
+    change, a change reset re-emits every change and no snapshot page.
+    Either way the topic then holds each order and change once."""
+    args = ["--sf-dir", sf_dir, "--sink-dir", str(tmp_path),
+            "--db-row-batch-size", "500", "--topic-name-template", "{table_name}"]
+    assert main(args) == 0
+    first = _topic_written(capsys)
+    assert main(["--reset-progress", "--topic-names", "orders", "--sink-dir", str(tmp_path),
+                 "--progress-kind", kind, "--execute"]) == 0
+    (reset,) = [r for r in _emitted(capsys) if r["kind"] == "reset"]
+    assert reset["tombstones_written"] == 1
+    assert main(args) == 0
+    rerun = _topic_written(capsys)
+    orders_n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    feed = cdc_events(spark, sf_dir)
+    n_deletes = feed.filter("__operation = 1").count()
+    if kind == "snapshot_rows":
+        assert rerun["rows"] == orders_n and rerun["snapshot_pages"] > 0
+    else:
+        assert rerun["rows"] == feed.count() + n_deletes and rerun["snapshot_pages"] == 0
+    written = _committed(spark, rerun)
+    snap, changes = written.filter("__operation = 0"), written.filter(_CHANGES)
+    assert snap.count() == snap.select("o_orderkey").distinct().count() == orders_n
+    assert changes.count() == changes.select("change_seq").distinct().count() == feed.count()
+    assert written.count() == first["rows"]
+
+
 def test_pipeline_mode_rerun_after_a_crash_completes_the_topic(
     spark, sf_dir, tmp_path, capsys, monkeypatch
 ):
@@ -218,7 +250,7 @@ def test_reset_progress_tool(spark, sf_dir, tmp_path, capsys):
     for topic in ("orders_cdc", "customer_cdc"):
         sink = TransactionalDirSink(str(tmp_path / topic), topic)
         sinks[topic] = sink
-        MicroBatcher(feed, batch_size=700, sink=sink.commit_next).run_to_completion()
+        MicroBatcher(feed, batch_size=700, sink=sink.commit_batch).run_to_completion()
     max_seq = feed.agg(F.max("change_seq")).collect()[0][0]
     assert sinks["orders_cdc"].last_progress() == max_seq
 

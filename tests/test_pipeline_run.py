@@ -231,7 +231,7 @@ def test_compaction_twice_with_new_batches_between(spark, sf_dir, tmp_path):
         "change_seq", F.col("change_seq") + 1_000_000
     ).withColumn("__tombstone", F.lit(False))
     next_id = max(sink.committed_batches()) + 1
-    assert sink.commit_batch(revived, next_id, 99_999_999)
+    assert sink.commit_batch(revived, 99_999_999) == next_id
     n2 = sink.compact(spark, ["o_orderkey"])
     assert n2 == n1 + 5
     assert sink.last_progress() == 99_999_999

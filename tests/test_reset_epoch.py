@@ -1,10 +1,12 @@
-"""Round-6 ADVICE fixes: tombstone epochs and kind-scoped resets.
+"""Progress resets and the batch ids after them.
 
-1. A tombstone written by ``TransactionalDirSink.reset_progress`` must start
-   a real batch-id epoch: a from-scratch rerun restarts at batch_id 0, and
-   ``commit_batch`` must accept the re-ingested batches instead of silently
-   dropping them against pre-reset manifest ids (the data-loss scenario the
-   round-5 test avoided by re-running without a sink attached).
+1. A rerun after ``TransactionalDirSink.reset_progress`` must re-ingest the
+   whole feed, and the topic must then hold each change exactly once. The
+   sink never reuses a batch id, so the rerun's batches cannot collide with
+   the pre-reset ones; instead the rerun's first batch supersedes all
+   pre-reset batches of its kind. That holds whatever the batch sizes: a
+   rule that matched re-ingested batches to old ones by id left old rows
+   behind whenever the rerun cut the feed into fewer batches.
 
 2. ``last_progress`` must treat a tombstone as a resume boundary only for
    its own kind — a reset scoped to snapshot_rows must not wipe the
@@ -23,11 +25,11 @@ from sqlserver_cdc_to_kafka_spark.streaming.change_feed import MicroBatcher
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
 
 
-def _run_batcher(feed, sink):
+def _run_batcher(feed, sink, batch_size=700):
     mb = MicroBatcher(
         feed,
-        batch_size=700,
-        sink=sink.commit_next,
+        batch_size=batch_size,
+        sink=sink.commit_batch,
         offset=sink.last_progress(),
     )
     return mb.run_to_completion()
@@ -47,20 +49,37 @@ def test_sink_attached_rerun_after_reset_reingests_everything(
     assert sink.reset_progress() == 1
     assert sink.last_progress() is None
 
-    # the critical path: a SINK-ATTACHED rerun from scratch. Its batches
-    # restart at batch_id 0; every one must commit (not be dropped as a
-    # pre-reset duplicate), and the resume point must advance past the
-    # tombstone to the re-ingested position.
+    # the critical path: a SINK-ATTACHED rerun from scratch. Every batch
+    # must commit (not be dropped as already committed), and the resume
+    # point must advance past the tombstone to the re-ingested position.
     assert _run_batcher(feed, sink) == n_feed
     assert sink.last_progress() == max_seq
     # the re-ingested batches supersede the pre-reset ones: the table holds
     # the corpus exactly once
     assert sink.read_committed(spark).count() == n_feed
 
-    # and a crash-replay of an already-committed post-reset batch id is
-    # still a no-op (idempotence preserved within the new epoch)
+    # and a crash-replay of an already-committed post-reset position is
+    # still a no-op (idempotence preserved after the reset)
     batch = feed.filter(F.col("change_seq") < 700)
-    assert sink.commit_batch(batch, 0, 123) is False
+    assert sink.commit_batch(batch, batch.agg(F.max("change_seq")).collect()[0][0]) is None
+
+
+def test_rerun_after_reset_with_another_batch_size_holds_each_change_once(
+    spark, sf_dir, tmp_path
+):
+    feed = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 2000)
+    n_feed = feed.count()
+    max_seq = feed.agg(F.max("change_seq")).collect()[0][0]
+    sink = TransactionalDirSink(str(tmp_path / "t"), "t")
+    assert _run_batcher(feed, sink, batch_size=700) == n_feed
+    assert len(sink.committed_batches()) > 1  # several pre-reset batches
+
+    assert sink.reset_progress() == 1
+    # the rerun cuts the feed into other batches than the first run did
+    assert _run_batcher(feed, sink, batch_size=1000) == n_feed
+    out = sink.read_committed(spark)
+    assert out.count() == out.select("change_seq").distinct().count() == n_feed
+    assert sink.last_progress() == max_seq
 
 
 def test_tombstone_only_bounds_its_own_kind(spark, sf_dir, tmp_path):

@@ -33,7 +33,7 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
     n_feed = feed.count()
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
 
-    mb = MicroBatcher(feed, batch_size=400, sink=sink.commit_next)
+    mb = MicroBatcher(feed, batch_size=400, sink=sink.commit_batch)
     total = mb.run_to_completion()
     assert total == n_feed
 
@@ -44,9 +44,9 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
         F.sum("change_seq")
     ).collect()
 
-    # crash-replay: committing the same batch id again is a no-op
+    # crash-replay: committing at a position already committed is a no-op
     some_batch = out.limit(10)
-    assert not sink.commit_batch(some_batch, 0, position=-1)
+    assert sink.commit_batch(some_batch, sink.committed_batches()[0]["position"]) is None
     assert sink.read_committed(spark).count() == n_feed
 
     # resume point = max committed index; a new batcher starting there sees 0
@@ -58,15 +58,15 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
 def test_staged_but_uncommitted_batch_is_invisible(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir).limit(100)
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
-    sink.commit_batch(feed, 0, position=99)
+    assert sink.commit_batch(feed, position=99) == 0
     # simulate a crash AFTER rename but BEFORE manifest append: write a
     # directory into data/ with no manifest record
     feed.limit(5).write.mode("overwrite").parquet(str(tmp_path / "out/data/batch=1"))
     assert sink.read_committed(spark).count() == 100  # phantom dir ignored
     assert set(sink.committed_batches()) == {0}
-    # replay of the crashed batch id must supersede the phantom dir: the
-    # re-commit overwrites data/batch=1 and the manifest now records it
-    assert sink.commit_batch(feed.limit(7), 1, position=106)
+    # the next commit takes the crashed batch's id, which never reached the
+    # manifest: it overwrites data/batch=1 and the manifest now records it
+    assert sink.commit_batch(feed.limit(7), position=106) == 1
     assert set(sink.committed_batches()) == {0, 1}
     assert sink.read_committed(spark).count() == 107
 
@@ -184,6 +184,26 @@ def test_reset_progress_cuts_off_a_torn_manifest_line(tmp_path):
         records = [json.loads(line) for line in f]
     assert [r["batch_id"] for r in records] == [0, 1]
     assert records[1]["tombstone"] and sink.last_progress() is None
+
+
+def test_commit_opens_the_manifest_once(spark, sf_dir, tmp_path, monkeypatch):
+    """A commit reads the records, picks its id or spots a replay, and
+    appends, all through one open of the manifest."""
+    feed = cdc_events(spark, sf_dir).limit(100)
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    assert sink.commit_batch(feed, position=99) == 0
+    real_open, opens = builtins.open, []
+
+    def open_(path, mode="r", *args, **kwargs):
+        if path == sink.manifest_path:
+            opens.append(mode)
+        return real_open(path, mode, *args, **kwargs)
+
+    monkeypatch.setattr(sinks, "open", open_, raising=False)
+    assert sink.commit_batch(feed, position=199) == 1
+    assert opens == ["ab+"]
+    assert sink.commit_batch(feed, position=199) is None
+    assert opens == ["ab+", "ab+"]
 
 
 def test_observed_metrics_and_reporters(spark, sf_dir, tmp_path):
@@ -333,7 +353,7 @@ def test_streaming_query_listener_captures_progress(spark, sf_dir, tmp_path):
 def test_time_travel_read(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 3000)
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
-    mb = MicroBatcher(feed, batch_size=400, sink=sink.commit_next)
+    mb = MicroBatcher(feed, batch_size=400, sink=sink.commit_batch)
     mb.run_to_completion()
     n_all = sink.read_committed(spark).count()
     n_b0 = sink.read_committed(spark, as_of=0).count()
