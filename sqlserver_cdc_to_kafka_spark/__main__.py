@@ -29,10 +29,16 @@ surface (``python -m cdc_kafka``, reference ``options.py`` flag names,
         keep their offsets. Dry-run (report only) unless --execute is set,
         like the reference.
 
-Flags reuse the reference's names (``--db-row-batch-size``,
-``--table-include-regex``, ``--topic-name-template``, …) so an operator of
-the reference can carry a deployment's settings across; ``--options-json``
-accepts the full `EngineConfig` as JSON (F16).
+The pipeline's options are the fields of ``config.EngineConfig``, under
+the reference's flag names: ``--db-row-batch-size``,
+``--table-include-regex``, ``--table-exclude-regex``,
+``--snapshot-table-include-regex``, ``--snapshot-table-exclude-regex``,
+``--topic-name-template`` and ``--disable-deletion-tombstones``.
+``--options-json`` takes the same fields as a JSON object (F16), and a flag
+overrides its key. The reference's other options change nothing in this
+pipeline, so they are refused: as a flag argparse exits with status 2, and
+as an ``--options-json`` key ``EngineConfig.from_json`` raises
+``ValueError`` naming it.
 """
 
 from __future__ import annotations
@@ -40,6 +46,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from dataclasses import fields, replace
 from typing import Sequence
 
 from sqlserver_cdc_to_kafka_spark.config import EngineConfig
@@ -53,7 +60,8 @@ def _build_parser() -> argparse.ArgumentParser:
                    help="output directory for pipeline mode (required unless "
                         "a read-only mode flag is set)")
     p.add_argument("--options-json", default=None,
-                   help="EngineConfig as a JSON object (overrides flag defaults)")
+                   help="EngineConfig fields as a JSON object; a flag given "
+                        "overrides its key")
     # reference-named option flags (options.py)
     p.add_argument("--db-row-batch-size", type=int, default=None)
     p.add_argument("--table-include-regex", default=None)
@@ -61,11 +69,7 @@ def _build_parser() -> argparse.ArgumentParser:
     p.add_argument("--snapshot-table-include-regex", default=None)
     p.add_argument("--snapshot-table-exclude-regex", default=None)
     p.add_argument("--topic-name-template", default=None)
-    p.add_argument("--progress-topic-name", default=None)
-    p.add_argument("--message-serializer", default=None, choices=("json", "avro"))
-    p.add_argument("--lsn-gap-handling", default=None)
-    p.add_argument("--partition-count", type=int, default=None)
-    p.add_argument("--disable-deletion-tombstones", action="store_true")
+    p.add_argument("--disable-deletion-tombstones", action="store_true", default=None)
     # modes
     p.add_argument("--run-validations", action="store_true")
     p.add_argument("--report-progress-only", action="store_true")
@@ -90,31 +94,11 @@ def _build_parser() -> argparse.ArgumentParser:
 
 
 def _config_from_args(args: argparse.Namespace) -> EngineConfig:
-    if args.options_json:
-        cfg = EngineConfig.from_json(args.options_json)
-    else:
-        cfg = EngineConfig()
-    overrides = {
-        "db_row_batch_size": args.db_row_batch_size,
-        "table_include_regex": args.table_include_regex,
-        "table_exclude_regex": args.table_exclude_regex,
-        "snapshot_table_include_regex": args.snapshot_table_include_regex,
-        "snapshot_table_exclude_regex": args.snapshot_table_exclude_regex,
-        "topic_name_template": args.topic_name_template,
-        "progress_topic_name": args.progress_topic_name,
-        "message_serializer": args.message_serializer,
-        "lsn_gap_handling": args.lsn_gap_handling,
-        "partition_count": args.partition_count,
-    }
-    for k, v in overrides.items():
-        if v is not None:
-            setattr(cfg, k, v)
-    if args.disable_deletion_tombstones:
-        cfg.disable_deletion_tombstones = True
-    cfg.run_validations = args.run_validations
-    cfg.report_progress_only = args.report_progress_only
-    cfg.__post_init__()  # re-validate after overrides
-    return cfg
+    """``--options-json``, then each flag given (argparse dest = field name);
+    ``replace`` re-runs the field checks on the result."""
+    cfg = EngineConfig.from_json(args.options_json or "{}")
+    flags = {f.name: getattr(args, f.name) for f in fields(EngineConfig)}
+    return replace(cfg, **{k: v for k, v in flags.items() if v is not None})
 
 
 _VALIDATION_CHECKS = (
@@ -244,14 +228,14 @@ def main(argv: Sequence[str] | None = None) -> int:
         return 0
 
     read_only = (
-        cfg.run_validations
-        or cfg.report_progress_only
+        args.run_validations
+        or args.report_progress_only
         or args.show_snapshot_history
         or args.find_truncation_candidates
     )
-    if cfg.run_validations:
+    if args.run_validations:
         _run_named_queries(spark, args.sf_dir, _VALIDATION_CHECKS)
-    if cfg.report_progress_only:
+    if args.report_progress_only:
         _run_named_queries(spark, args.sf_dir, ("val_progress_rollup",))
     if args.show_snapshot_history:
         _run_named_queries(spark, args.sf_dir, ("val_snapshot_history",))

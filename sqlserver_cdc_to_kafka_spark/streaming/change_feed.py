@@ -32,8 +32,6 @@ from pyspark.sql import functions as F
 from sqlserver_cdc_to_kafka_spark.model.envelope import OP_DELETE
 from sqlserver_cdc_to_kafka_spark.streaming.metrics import summarize
 
-MIN_POLL_INTERVAL_S = 3  # constants.py:6
-MAX_POLL_INTERVAL_S = 10  # constants.py:7
 DEFAULT_BATCH_SIZE = 2000  # options.py:282-285
 
 

@@ -22,8 +22,6 @@ from typing import TextIO
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-METRICS_REPORTING_INTERVAL_S = 20  # constants.py:8
-
 
 @dataclass
 class BatchMetrics:

@@ -85,6 +85,17 @@ def _last_position(records: list[dict], kind: str = "change_rows"):
     return next((p for p in reversed(positions) if p is not None), None)
 
 
+def _pending_resets(records: list[dict]) -> set[str]:
+    """Kinds with a reset record and no batch of that kind committed since."""
+    pending: set[str] = set()
+    for rec in records:
+        if rec.get("tombstone"):
+            pending.add(rec["kind"])
+        else:
+            pending.discard(rec["kind"])
+    return pending
+
+
 def _visible(records: list[dict]) -> list[dict]:
     """The data records a reader sees. Right after a reset, the kind's
     committed data stays visible; the rerun's first batch of that kind
@@ -225,11 +236,22 @@ class TransactionalDirSink:
         Progress is preserved: the compacted batch takes the max committed
         batch id, position and snapshot key, so resume semantics are
         unchanged. Returns surviving row count. At scale this is the same
-        one-shuffle ``max_by`` with the output range-partitioned by key."""
+        one-shuffle ``max_by`` with the output range-partitioned by key.
+
+        Raises ``ValueError``, and changes nothing, while a reset awaits its
+        rerun (``_pending_resets``): the compacted generation is always read
+        and drops the reset record, so the rerun could neither supersede the
+        pre-reset rows nor restart the reset kind from scratch."""
         from sqlserver_cdc_to_kafka_spark.operators.compaction import (
             last_value_per_key,
         )
 
+        pending = _pending_resets(self._records())
+        if pending:
+            raise ValueError(
+                f"{self.topic}: cannot compact before the rerun after a reset of "
+                f"{sorted(pending)} commits its first batch of that kind"
+            )
         batches = self.committed_batches()
         if not batches:
             return 0

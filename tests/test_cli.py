@@ -182,6 +182,19 @@ def test_pipeline_mode_without_snapshot_commits_only_changes(
     assert row["rows"] == written.count() == feed.count() + n_deletes
 
 
+def test_snapshot_include_regex_that_does_not_match_commits_only_changes(
+    spark, sf_dir, tmp_path, capsys
+):
+    rc = main(["--sf-dir", sf_dir, "--sink-dir", str(tmp_path),
+               "--snapshot-table-include-regex", "customer"])
+    assert rc == 0
+    row = _topic_written(capsys)
+    assert row["snapshot_pages"] == 0
+    written = _committed(spark, row)
+    assert written.filter("__operation = 0").count() == 0
+    assert written.filter(_CHANGES).count() == cdc_events(spark, sf_dir).count()
+
+
 def test_tombstone_disable_flag(spark, sf_dir, tmp_path, capsys):
     """The flag drops only the (key, null) row after each delete; the
     deletes themselves are still emitted."""
@@ -202,6 +215,14 @@ def test_exclude_regex_skips_table(sf_dir, tmp_path, capsys):
     assert rc == 0
     out = _emitted(capsys)
     assert [r["kind"] for r in out] == ["skipped"]
+
+
+def test_include_regex_that_does_not_match_skips_table(sf_dir, tmp_path, capsys):
+    rc = main(["--sf-dir", sf_dir, "--sink-dir", str(tmp_path),
+               "--table-include-regex", "customer"])
+    assert rc == 0
+    assert [r["kind"] for r in _emitted(capsys)] == ["skipped"]
+    assert not list(tmp_path.iterdir())
 
 
 def test_run_validations_is_read_only(sf_dir, tmp_path, capsys):
@@ -226,7 +247,7 @@ def test_pipeline_mode_requires_sink_dir(sf_dir):
     assert main(["--sf-dir", sf_dir]) == 2
 
 
-def test_options_json_roundtrip(sf_dir, tmp_path, capsys):
+def test_options_json_roundtrip(spark, sf_dir, tmp_path, capsys):
     cfg = json.dumps({"topic_name_template": "{table_name}_only",
                       "db_row_batch_size": 1000})
     rc = main(["--sf-dir", sf_dir, "--sink-dir", str(tmp_path),
@@ -234,12 +255,36 @@ def test_options_json_roundtrip(sf_dir, tmp_path, capsys):
     assert rc == 0
     (row,) = [r for r in _emitted(capsys) if r["kind"] == "topic_written"]
     assert row["topic"] == "orders_only"
+    # one page per 1000 orders, more pages than the default 2000-row batch
+    orders_n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    assert row["snapshot_pages"] == -(-orders_n // 1000) > -(-orders_n // 2000)
 
 
 def test_invalid_option_value_rejected(sf_dir):
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="db_row_batch_size"):
         main(["--sf-dir", sf_dir, "--run-validations",
-              "--lsn-gap-handling", "bogus"])
+              "--db-row-batch-size", "0"])
+
+
+@pytest.mark.parametrize("flag, value", [
+    ("--progress-topic-name", "_progress"),
+    ("--message-serializer", "json"),
+    ("--lsn-gap-handling", "begin_new_snapshot"),
+    ("--partition-count", "3"),
+])
+def test_reference_flags_the_pipeline_ignores_are_rejected(sf_dir, flag, value):
+    """A flag that would change nothing is refused at parse time (argparse
+    exits with status 2) instead of being accepted and dropped."""
+    with pytest.raises(SystemExit) as exit_:
+        main(["--sf-dir", sf_dir, "--run-validations", flag, value])
+    assert exit_.value.code == 2
+
+
+@pytest.mark.parametrize("key", ["lsn_gap_handling", "run_validations"])
+def test_options_json_with_an_unsupported_key_is_rejected(sf_dir, key):
+    with pytest.raises(ValueError, match=key):
+        main(["--sf-dir", sf_dir, "--run-validations",
+              "--options-json", json.dumps({key: "ignore"})])
 
 
 def test_reset_progress_tool(spark, sf_dir, tmp_path, capsys):

@@ -12,17 +12,26 @@
    its own kind — a reset scoped to snapshot_rows must not wipe the
    change_rows resume point (per-(topic, kind) scoping, like the
    reference's progress tracking).
+
+3. Compaction must wait for the rerun: a compacted generation is always
+   read and carries no reset record, so compacting in between would leave
+   the pre-reset rows next to the rerun's copy of them.
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from sqlserver_cdc_to_kafka_spark.fixtures.cdc_events import cdc_events
+from sqlserver_cdc_to_kafka_spark.model.envelope import OP_DELETE
 from sqlserver_cdc_to_kafka_spark.streaming.change_feed import MicroBatcher
+from sqlserver_cdc_to_kafka_spark.streaming.pipeline_run import PipelineRun
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
+from sqlserver_cdc_to_kafka_spark.tables import load_table
 
 
 def _run_batcher(feed, sink, batch_size=700):
@@ -108,3 +117,42 @@ def test_tombstone_only_bounds_its_own_kind(spark, sf_dir, tmp_path):
     assert sink.last_progress("snapshot_rows") is None
     assert sink.last_progress() == max_seq
     assert sink.last_progress("change_rows") == max_seq
+
+
+@pytest.mark.parametrize("kind", ["change_rows", "snapshot_rows"])
+def test_compaction_waits_for_the_rerun_after_a_reset(spark, sf_dir, tmp_path, kind):
+    orders = load_table(spark, sf_dir, "orders")
+    feed = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 2000)
+    sink = TransactionalDirSink(str(tmp_path / "orders"), "orders")
+
+    def run():
+        return PipelineRun(spark, orders, feed, ["o_orderkey"], sink, batch_size=700).run()
+
+    first = run()
+    assert sink.reset_progress((kind,)) == 1
+    with open(sink.manifest_path, "rb") as f:
+        manifest = f.read()
+    data = sorted(os.listdir(os.path.join(sink.root, "data")))
+    with pytest.raises(ValueError, match=kind):
+        sink.compact(spark, ["o_orderkey"])
+    with open(sink.manifest_path, "rb") as f:
+        assert f.read() == manifest
+    assert sorted(os.listdir(os.path.join(sink.root, "data"))) == data
+
+    # the rerun re-emits the reset kind, whose first batch supersedes the
+    # pre-reset rows: each order and change is in the topic once
+    assert run() > 0
+    out = sink.read_committed(spark)
+    snap = out.filter("__operation = 0")
+    changes = out.filter("__operation != 0 AND NOT __tombstone")
+    n_orders, n_feed = orders.count(), feed.count()
+    assert snap.count() == snap.select("o_orderkey").distinct().count() == n_orders
+    assert changes.count() == changes.select("change_seq").distinct().count() == n_feed
+    assert out.count() == first
+
+    # now compaction runs, and leaves one row per live key
+    n_deleted = feed.filter(F.col("__operation") == OP_DELETE).count()
+    n_live = sink.compact(spark, ["o_orderkey"])
+    assert n_live == n_orders - n_deleted
+    compacted = sink.read_committed(spark)
+    assert compacted.count() == compacted.select("o_orderkey").distinct().count() == n_live
